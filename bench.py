@@ -28,6 +28,7 @@ from zonal_datacube_spark.functions.grain_cache import (
     STATS as GRAIN_STATS,
     warm_family_grains,
 )
+from zonal_datacube_spark.functions.stamped_cache import CACHES
 from zonal_datacube_spark.registry import all_queries
 from zonal_datacube_spark.session import get_spark
 
@@ -169,10 +170,12 @@ def main() -> int:
                     "after": [round(x, 2) for x in load_after],
                 },
                 "suspect_under_load": suspect,
-                # grain-cache visibility (VERDICT r12 nit #3): eviction
-                # is silent-but-slow (recompute), so thrash must be
-                # observable — a full suite run should show evictions=0
-                "grain_cache": dict(GRAIN_STATS),
+                # cache visibility (VERDICT r12 nit #3): eviction is
+                # silent-but-slow (recompute), so thrash must be
+                # observable — a full suite run should show evictions=0.
+                # One "<name>_cache" counter dict per stamped cache
+                # (grain, relation, edge, pq_index).
+                **{f"{name}_cache": dict(c.stats) for name, c in CACHES.items()},
                 "total": round(sum(timings.values()), 4),
             },
             f,

@@ -1,4 +1,5 @@
-"""Datacube-core tests: fishnet pruning, both zonal paths agree, nodata.
+"""Datacube-core tests: fishnet pruning, both zonal paths agree, nodata,
+and both paths match numpy box sums at any raster width.
 
 These lock in the reference's signature semantics (SURVEY.md §2.11) on a
 real (synthetic, distributed) raster — no geo libraries required.
@@ -6,6 +7,7 @@ real (synthetic, distributed) raster — no geo libraries required.
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -63,3 +65,45 @@ def test_nodata_excluded(spark, raster, zones):
     full = {r.zone_id: r for r in zonal_stats(raster, zones, "elevation").collect()}
     for zid, r in res.items():
         assert r.n_pixels < full[zid].n_pixels  # masked pixels dropped
+
+
+# two tile rows: on a single row every width prunes the same
+HEIGHT = TILE + 44
+
+
+def _zones(width: int) -> list[tuple]:
+    return [
+        (0, "west", 10, 20, 300, HEIGHT - 10),
+        (1, "east", width - 300, 100, width, HEIGHT),
+        (2, "mid", width // 2 - 50, TILE - 60, width // 2 + 280, HEIGHT - 5),
+    ]
+
+
+def _box_reference(zones: list[tuple]) -> dict[int, tuple[int, float, float, float]]:
+    out = {}
+    for zid, _, x0, y0, x1, y1 in zones:
+        x = np.arange(x0, x1, dtype=np.float64)[None, :]
+        y = np.arange(y0, y1, dtype=np.float64)[:, None]
+        v = np.round(np.sin(x * 0.01) * 100.0 + np.cos(y * 0.02) * 50.0 + 500.0, 3)
+        out[zid] = (int(v.size), float(v.sum()), float(v.min()), float(v.max()))
+    return out
+
+
+@pytest.mark.parametrize("width", [1024, 2048, 4096, 4097])
+def test_zonal_paths_match_box_sums(spark, width):
+    zones_rows = _zones(width)
+    zones = spark.createDataFrame(
+        zones_rows,
+        "zone_id INT, zone_name STRING, xmin INT, ymin INT, xmax INT, ymax INT",
+    )
+    pixels = synthetic_raster(spark, width=width, height=HEIGHT)
+    want = _box_reference(zones_rows)
+    for path in (zonal_stats, zonal_stats_tiled):
+        got = {r.zone_id: r for r in path(pixels, zones).collect()}
+        assert set(got) == set(want), path.__name__
+        for zid, (n, s, lo, hi) in want.items():
+            r = got[zid]
+            assert r.n_pixels == n, (path.__name__, zid)
+            assert r.sum_v == pytest.approx(s, abs=0.05, rel=1e-9)
+            assert r.min_v == pytest.approx(lo, abs=1.1e-3)
+            assert r.max_v == pytest.approx(hi, abs=1.1e-3)

@@ -39,21 +39,21 @@ def main() -> int:
     con = duck_connect(sf_dir)
     failures = 0
     for k in selected:
-        if k not in oracle:
-            df = queries[k](spark, sf_dir)
-            bad = driver_unhashable_cols(df.schema)
-            n = df.count()
-            if bad:
-                print(f"[ERR ] {k}: driver-unhashable cols {bad} ({n} rows)")
-                failures += 1
-            else:
-                print(f"[ROWS] {k}: {n} rows (rows-only key, no oracle)")
-            continue
         t0 = time.perf_counter()
         try:
+            if k not in oracle:
+                df = queries[k](spark, sf_dir)
+                bad = driver_unhashable_cols(df.schema)
+                n = df.count()
+                if bad:
+                    print(f"[ERR ] {k}: driver-unhashable cols {bad} ({n} rows)")
+                    failures += 1
+                else:
+                    print(f"[ROWS] {k}: {n} rows (rows-only key, no oracle)")
+                continue
             res = compare_query(k, spark, con, queries[k], oracle[k], sf_dir)
         except Exception as exc:  # keep going: one broken key ≠ broken suite
-            print(f"[ERR ] {k}: {type(exc).__name__}: {str(exc).splitlines()[0][:200]}")
+            print(f"[ERR ] {k}: {type(exc).__name__}: {(str(exc).splitlines() or [''])[0][:200]}")
             failures += 1
             continue
         print(f"{res}  ({time.perf_counter() - t0:.2f}s)")

@@ -81,7 +81,7 @@ DIM_TABLES = {"region", "nation"}
 # PLAN-phase skips (superset of tools/plan_audit.py's): TRUE-streaming keys
 # EXECUTE a streaming query at plan time and pin their own shuffle
 # partitions (the state-store sizing contract in
-# streaming_batch._stream_shuffle_partitions — the rehearsal conf wouldn't
+# streaming_batch._STREAM_CONFS — the rehearsal conf wouldn't
 # even apply), and the two eager keys return local relations — there is no
 # lazy batch plan to classify. They are NOT exempt from the PARITY phase:
 # since r12 the streaming file source is layout-aware (streaming/demo.py

@@ -86,39 +86,48 @@ def make_zones(spark: SparkSession) -> DataFrame:
     )
 
 
-def tiles_intersecting(zones: DataFrame, width: int = 2048) -> DataFrame:
-    """Fishnet pruning: the distinct tile_ids overlapped by any zone bbox —
-    joined against the pixel table this prunes entire tiles before any
-    pixel is touched (the COG-window-read analogue)."""
-    tpr = (width + TILE - 1) // TILE  # tiles per row
-    ty0 = F.floor(F.col("ymin") / TILE).cast("int")
-    ty1 = F.floor((F.col("ymax") - 1) / TILE).cast("int")
-    z = zones.select(
-        F.explode(F.sequence(ty0, ty1)).alias("ty"),
-        F.col("xmin"),
-        F.col("xmax"),
-    )
-    return (
-        z.select(
-            F.explode(
-                F.sequence(
-                    F.floor(F.col("xmin") / TILE).cast("int"),
-                    F.floor((F.col("xmax") - 1) / TILE).cast("int"),
-                )
-            ).alias("tx"),
-            "ty",
+def _zone_tiles(zones: DataFrame) -> DataFrame:
+    """The distinct fishnet tile coordinates (tx, ty) any zone bbox
+    overlaps."""
+
+    def span(lo: str, hi: str):
+        return F.sequence(
+            F.floor(F.col(lo) / TILE).cast("int"),
+            F.floor((F.col(hi) - 1) / TILE).cast("int"),
         )
+
+    return (
+        zones.select(F.explode(span("ymin", "ymax")).alias("ty"), "xmin", "xmax")
+        .select(F.explode(span("xmin", "xmax")).alias("tx"), "ty")
+        .distinct()
+    )
+
+
+def tiles_intersecting(zones: DataFrame, width: int = 2048) -> DataFrame:
+    """Fishnet pruning: the distinct tile_ids overlapped by any zone bbox
+    on a raster ``width`` pixels wide — joined against the pixel table
+    this prunes entire tiles before any pixel is touched (the
+    COG-window-read analogue)."""
+    tpr = (width + TILE - 1) // TILE  # tiles per row
+    return (
+        _zone_tiles(zones)
         .select((F.col("ty") * tpr + F.col("tx")).alias("tile_id"))
         .distinct()
     )
 
 
 def assign_zones(pixels: DataFrame, zones: DataFrame) -> DataFrame:
-    """Pixel→zone assignment: fishnet prune (semi join on tile_id) then
-    broadcast bbox-containment join. Overlapping zones multi-assign (the
-    zonal-stats convention: a pixel counts in every zone containing it)."""
+    """Pixel→zone assignment: fishnet prune (semi join on each pixel's
+    tile coordinates, derived from its own x and y, so it holds for any
+    raster width) then broadcast bbox-containment join. Overlapping zones
+    multi-assign (the zonal-stats convention: a pixel counts in every
+    zone containing it)."""
+    tiles = F.broadcast(_zone_tiles(zones))
     pruned = pixels.join(
-        F.broadcast(tiles_intersecting(zones)), "tile_id", "left_semi"
+        tiles,
+        ((pixels.x / TILE).cast("int") == tiles.tx)
+        & ((pixels.y / TILE).cast("int") == tiles.ty),
+        "left_semi",
     )
     z = F.broadcast(zones)
     return pruned.join(

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from zonal_datacube_spark.functions.stamped_cache import StampedCache, stamped_key
 from zonal_datacube_spark.operators.similarity import _dot
 
 # 16 subspaces x 4 dims x 4-bit codes = 8 bytes/vector (32x compression).
@@ -137,9 +138,20 @@ def pq_train(
     ksub: int = PQ_K,
     iters: int = 3,
     dim: int | None = None,
-    with_rows: bool = False,
-):
-    """Fit per-subspace codebooks; returns (sub, code, cvec ARRAY<DOUBLE>).
+) -> DataFrame:
+    """Fit per-subspace codebooks (``pq_fit``); returns the codebook as
+    (sub, code, cvec ARRAY<DOUBLE>)."""
+    return _codebook_df(emb.sparkSession, pq_fit(emb, m, ksub, iters, dim))
+
+
+def pq_fit(
+    emb: DataFrame,
+    m: int = PQ_M,
+    ksub: int = PQ_K,
+    iters: int = 3,
+    dim: int | None = None,
+) -> dict[tuple[int, int], list[float]]:
+    """Fit per-subspace codebooks; returns ``{(sub, code): cvec}``.
 
     Codebook fitting runs DRIVER-SIDE in numpy over a bounded
     deterministic sample (≤ ``PQ_TRAIN_CAP`` vectors — capped
@@ -171,15 +183,12 @@ def pq_train(
     ``len(sample)``-entry codebook (ADVICE r09: the seed slice, update
     loop, and output dict all use the effective count).
 
-    ``with_rows=True`` additionally returns the ``{(sub, code): cvec}``
-    dict the DataFrame was built FROM (r14, guide §1.2): the codebook is
-    fitted driver-side, so consumers that need its values on the driver
-    (LUT folds, ``pq_encode``'s kernel) should take this dict instead of
-    round-tripping a ``codebook.collect()`` job over the LogicalRDD the
-    same values were just parallelized into."""
+    The codebook is fitted driver-side, so consumers that need its values
+    on the driver (LUT folds, ``pq_encode``'s kernel) should take this
+    dict instead of round-tripping a ``codebook.collect()`` job over a
+    DataFrame built from the same values (r14, guide §1.2)."""
     import numpy as np
 
-    spark = emb.sparkSession
     sample = (
         emb.select("vec_id", "embedding")
         .orderBy(F.xxhash64("vec_id"), "vec_id")
@@ -203,24 +212,24 @@ def pq_train(
                 mask = assign[s] == c
                 if mask.any():
                     cb[s, c] = sub[s][mask].mean(axis=0)
-    current = {
+    return {
         (s, c): [float(v) for v in cb[s, c]]
         for s in range(m)
         for c in range(ksub_eff)
     }
-    df = _codebook_df(spark, current)
-    return (df, current) if with_rows else df
 
 
 def pq_encode(
     emb: DataFrame,
-    codebook: DataFrame,
+    codebook: DataFrame | None = None,
     m: int = PQ_M,
     dim: int | None = None,
     codebook_rows: dict[tuple[int, int], list[float]] | None = None,
 ) -> DataFrame:
     """(vec_id, codes ARRAY<INT>) — the compressed corpus representation:
-    m small ints instead of dim floats.
+    m small ints instead of dim floats. Takes exactly one of ``codebook``
+    (a ``pq_train`` frame, collected here) and ``codebook_rows`` (a
+    ``pq_fit`` dict, used as is).
 
     Encode is a MAP-ONLY Arrow kernel (r11): the codebook is
     control-plane sized (m×ksub×(dim/m) doubles ≈ 8 KB) and ships
@@ -240,13 +249,12 @@ def pq_encode(
     import numpy as np
     import pandas as pd
 
+    if (codebook is None) == (codebook_rows is None):
+        raise ValueError("pq_encode takes exactly one of codebook / codebook_rows")
     if dim is None:
         dim = len(emb.select("embedding").first()[0])
     d = dim // m
     if codebook_rows is not None:
-        # the codebook was fitted driver-side (pq_train with_rows=True):
-        # use its values directly instead of a collect() job over the
-        # LogicalRDD they were just parallelized into (r14, guide §1.2)
         entries = [(s, c, v) for (s, c), v in codebook_rows.items()]
     else:
         rows = codebook.collect()  # bounded: m × ksub_eff codebook entries
@@ -341,11 +349,27 @@ def _exact_rerank(
 # Trained-index cache: build-once / serve-many — the FAISS index
 # lifecycle. An ANN index (coarse centroids, PQ codebooks, encoded code
 # table) is constructed offline and amortized over queries; re-training
-# per query would misstate the serving cost. Keyed by a caller-provided
-# corpus key + every training parameter; entries hold KB-sized local
-# relations plus the persisted code table, all bound to the building
-# SparkSession (callers in a fresh session must use a fresh key or None).
-_INDEX_CACHE: dict[tuple, tuple] = {}
+# per query would misstate the serving cost. Entries hold KB-sized local
+# relations plus the persisted code table. Identity (the corpus dir's
+# embeddings stamp + every training parameter), cap, eviction and
+# re-persist: functions/stamped_cache.py.
+_INDEX_CACHE = StampedCache("pq_index", cap=4)
+
+
+def _index(emb: DataFrame, cache_key: str | None, params: tuple, build) -> tuple:
+    """The index ``build()`` returns, a tuple ending in its code table.
+    With a ``cache_key`` — the corpus dir ``emb`` was loaded from — it is
+    built once per (session, corpus, embeddings stamp, params) and its
+    code table persisted; without one it is built per call, unpersisted."""
+    if cache_key is None:
+        return build()
+
+    def build_persisted() -> tuple:
+        *parts, codes = build()
+        return (*parts, codes.persist())
+
+    key = stamped_key(emb.sparkSession, cache_key, ("embeddings",), *params)
+    return _INDEX_CACHE.get_or_build(key, build_persisted)
 
 
 def ivf_pq_ann(
@@ -373,29 +397,25 @@ def ivf_pq_ann(
     DataFrame joins: every stage is an equi-join or aggregate; the only
     broadcast state is centroids + codebook + per-probe LUT (all KB-sized).
 
-    ``cache_key`` (e.g. the corpus path) enables the build/serve split:
-    training + encoding run once per (key, params) and later calls serve
-    from the cached index — the offline-build lifecycle every production
-    ANN deployment uses."""
+    ``cache_key`` (the corpus dir ``emb`` was loaded from) enables the
+    build/serve split: training + encoding run once per (corpus content,
+    params) and later calls serve from the cached index — the
+    offline-build lifecycle every production ANN deployment uses."""
     from zonal_datacube_spark.functions.kmeans import assign_cells, kmeans_fit
 
-    ckey = ("ivfpq", cache_key, n_cells, m, ksub, iters, train_mod, kmeans_iters)
-    cached = _INDEX_CACHE.get(ckey) if cache_key is not None else None
-    if cached is not None:
-        quantizer, codebook, codes = cached
-    else:
-        if dim is None:
-            dim = len(emb.select("embedding").first()[0])
+    def build() -> tuple:
+        d = dim or len(emb.select("embedding").first()[0])
         quantizer = kmeans_fit(emb, k=n_cells, iters=kmeans_iters)
-        assigned = assign_cells(emb, quantizer, dim=dim).select("vec_id", "cell")
+        assigned = assign_cells(emb, quantizer, dim=d).select("vec_id", "cell")
         train_emb = (
             emb.filter(F.col("vec_id") % train_mod == 0) if train_mod > 1 else emb
         )
-        codebook = pq_train(train_emb, m, ksub, iters, dim=dim)
-        codes = pq_encode(emb, codebook, m, dim=dim).join(assigned, "vec_id")
-        if cache_key is not None:
-            codes = codes.persist()
-            _INDEX_CACHE[ckey] = (quantizer, codebook, codes)
+        codebook = pq_train(train_emb, m, ksub, iters, dim=d)
+        codes = pq_encode(emb, codebook, m, dim=d).join(assigned, "vec_id")
+        return quantizer, codebook, codes
+
+    params = ("ivfpq", n_cells, m, ksub, iters, train_mod, kmeans_iters)
+    quantizer, codebook, codes = _index(emb, cache_key, params, build)
     probes = emb.filter(F.col("vec_id").isin(*probe_ids)).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
@@ -461,21 +481,16 @@ def pq_ann(
     ``train_mod`` > 1 trains codebooks on the deterministic 1/train_mod
     slice ``vec_id % train_mod == 0`` — codebooks need ~100·K points per
     subspace, not the corpus; production PQ always trains on a sample."""
-    ckey = ("pq", cache_key, m, ksub, iters, train_mod)
-    cached = _INDEX_CACHE.get(ckey) if cache_key is not None else None
-    if cached is not None:
-        codebook, codes = cached
-    else:
-        if dim is None:
-            dim = len(emb.select("embedding").first()[0])
+    def build() -> tuple:
+        d = dim or len(emb.select("embedding").first()[0])
         train_emb = (
             emb.filter(F.col("vec_id") % train_mod == 0) if train_mod > 1 else emb
         )
-        codebook = pq_train(train_emb, m, ksub, iters, dim=dim)
-        codes = pq_encode(emb, codebook, m, dim=dim)
-        if cache_key is not None:
-            codes = codes.persist()
-            _INDEX_CACHE[ckey] = (codebook, codes)
+        codebook = pq_train(train_emb, m, ksub, iters, dim=d)
+        return codebook, pq_encode(emb, codebook, m, dim=d)
+
+    params = ("pq", m, ksub, iters, train_mod)
+    codebook, codes = _index(emb, cache_key, params, build)
     probes = emb.filter(F.col("vec_id").isin(*probe_ids)).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )

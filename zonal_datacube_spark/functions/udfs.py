@@ -24,14 +24,6 @@ from pyspark.sql.types import DoubleType
 
 
 @pandas_udf(DoubleType())
-def cosine_to_unit_first_axis(v: pd.Series) -> pd.Series:
-    """Vectorized scalar kernel: cosine of each embedding against the unit
-    vector e1 (== first component for unit-norm inputs). Demonstrates the
-    Arrow array-of-float path."""
-    return v.map(lambda arr: float(arr[0]) if arr is not None and len(arr) else None)
-
-
-@pandas_udf(DoubleType())
 def trimmed_mean_10(v: pd.Series) -> float:  # Series→scalar ⇒ GROUPED_AGG
     """Custom grouped aggregate: 10%-trimmed mean — a zonal statistic the
     built-in aggregates don't offer (robust to raster outliers)."""

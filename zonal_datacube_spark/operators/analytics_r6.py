@@ -334,14 +334,14 @@ def q_sim_opq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     math (⟨Rv, Rq⟩ = ⟨v, q⟩), so both variants share the raw-space
     ground truth.
 
-    Plan shape: the two variants train in ONE pq_train loop by
+    Plan shape: the two variants train in ONE pq_fit loop by
     concatenating raw‖rotated into a 128-dim vector and doubling the
     subspace count — subs 0..15 are the raw codebooks, 16..31 the
     rotated ones, each trained on exactly its own slice (per-subspace
     k-means is independent, so the combined loop produces bit-identical
     codebooks while halving the driver round-trips that dominate this
     key's cost). Only the ADC fold splits by variant afterwards."""
-    from zonal_datacube_spark.functions.pq import pq_encode, pq_train
+    from zonal_datacube_spark.functions.pq import pq_encode, pq_fit
     from zonal_datacube_spark.operators.similarity import _dot
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -378,15 +378,12 @@ def q_sim_opq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-joined the rotated output back on vec_id, paying a shuffle for
     # data the GEMV batch already held)
     both = _rotate(emb, concat_raw=True).persist()
-    # with_rows: the codebook is fitted DRIVER-side, so take its values
+    # pq_fit: the codebook is fitted DRIVER-side, so take its values
     # directly for the LUT fold and the encode kernel — the r13 shape
     # re-collected the LogicalRDD the same values were parallelized into,
     # two pure round-trip jobs (r14, guide §1.2 job-count discipline)
-    cb, cb_fit = pq_train(
-        both, 2 * OPQ_M, OPQ_KSUB, iters=OPQ_ITERS, dim=2 * OPQ_DIM,
-        with_rows=True,
-    )
-    codes = pq_encode(both, cb, 2 * OPQ_M, dim=2 * OPQ_DIM, codebook_rows=cb_fit)
+    cb_fit = pq_fit(both, 2 * OPQ_M, OPQ_KSUB, iters=OPQ_ITERS, dim=2 * OPQ_DIM)
+    codes = pq_encode(both, m=2 * OPQ_M, dim=2 * OPQ_DIM, codebook_rows=cb_fit)
 
     # ADC with a per-variant split. The LUT is CONTROL-PLANE sized
     # (probes × 2M × K = 5×32×16 partials — the object faiss ships to
@@ -407,7 +404,7 @@ def q_sim_opq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in both.filter(F.col("vec_id").isin(*OPQ_PROBE_IDS)).collect()
     }
     cb_rows = {k: list(v) for k, v in cb_fit.items()}
-    # LUT stride = the codebook's EFFECTIVE code count: pq_train degrades
+    # LUT stride = the codebook's EFFECTIVE code count: pq_fit degrades
     # to a len(sample)-entry codebook on corpora smaller than OPQ_KSUB
     # (its documented contract), and pq_encode emits codes < ksub_eff —
     # iterating range(OPQ_KSUB) here would KeyError on the missing codes

@@ -29,15 +29,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from zonal_datacube_spark.sources.loader import load_table
 from zonal_datacube_spark.functions.local_rel import local_relation
+from zonal_datacube_spark.functions.stamped_cache import StampedCache, stamped_key
+from zonal_datacube_spark.sources.loader import load_table
 
 DAMP_NUM, DAMP_DEN = 85, 100  # d = 0.85 as a ratio — keeps everything integer
 UNIT = 1_000_000_000_000  # rank fixed-point scale: 1e-12
@@ -60,62 +58,27 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Process-level cache of the PERSISTED trade-edge rollup (r13, guide
-# §2.4 — share one exchange/scan across keys; the functions/grain_cache
-# discipline applied to the graph family). Seven declared keys
-# (pagerank, sssp, 2hop, assortativity, kcore, link_jaccard,
-# reciprocity) each derive the SAME (src, dst, w) nation-pair rollup,
-# and each call re-ran the 4-table fact join (~0.7–1.2 s at sf0.1;
-# lineitem-scaled at 100 TB). The rollup itself is SCHEMA-bounded
-# (≤ |nations|² = 625 rows at any SF — nations don't scale with data),
-# so persisting it is a control-plane-sized cache, never a data-scaled
-# one. Content-stamped on all four source tables (ADVICE r12 class: a
-# regenerated corpus must miss, even rewritten in place); LRU-capped;
-# evicted entries are unpersisted. bench.py's warm-up pagerank call
-# fills it, billing the one fact scan to suite warm-up exactly like the
-# percentile-family grains.
-# SINGLE-THREADED-DRIVER assumption (ADVICE r13, same contract as
-# percentiles._fold_partitions): this OrderedDict is unsynchronized and
-# its persist/unpersist side effects are not atomic — the engine's
-# harnesses run keys sequentially on one driver thread; a future
-# multi-threaded caller must add a lock before sharing it.
-_EDGE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
+# The PERSISTED trade-edge rollup, shared across the seven graph keys
+# (pagerank, sssp, 2hop, assortativity, kcore, link_jaccard, reciprocity)
+# that each derive the SAME (src, dst, w) nation-pair rollup from a
+# 4-table fact join (~0.7–1.2 s at sf0.1; lineitem-scaled at 100 TB). The
+# rollup is SCHEMA-bounded (≤ |nations|² = 625 rows at any SF), so
+# persisting it is a control-plane-sized cache, never a data-scaled one.
+# Identity, cap, eviction, re-persist and locking: functions/
+# stamped_cache.py. bench.py's warm-up pagerank call fills it, billing the
+# one fact scan to suite warm-up like the percentile-family grains.
+_EDGE_TABLES = ("lineitem", "orders", "customer", "supplier")
 _EDGE_CACHE_CAP = 4
+_EDGE_CACHE = StampedCache("edge", cap=_EDGE_CACHE_CAP)
 
 
 def trade_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from zonal_datacube_spark.sources.loader import source_stamp
+    def build() -> DataFrame:
+        df = _trade_edges(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+        df.count()  # materialize eagerly: ≤ nations² rows by construction
+        return df
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        tuple(
-            source_stamp(os.path.join(sf_dir, f"{t}.parquet"))
-            for t in ("lineitem", "orders", "customer", "supplier")
-        ),
-    )
-    hit = _EDGE_CACHE.get(key)
-    if hit is not None:
-        _EDGE_CACHE.move_to_end(key)
-        # a spark.catalog.clearCache() elsewhere (tests, interactive use)
-        # drops the persist UNDER the memoized DataFrame — without this
-        # guard the hit would silently recompute the fact join on every
-        # downstream use (the silent-slow twin of the ADVICE-r12 stale
-        # -cache class)
-        if hit.storageLevel == StorageLevel.NONE:
-            hit.persist(StorageLevel.MEMORY_AND_DISK)
-            hit.count()
-        return hit
-    df = _trade_edges(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()  # materialize eagerly: ≤ nations² rows by construction
-    _EDGE_CACHE[key] = df
-    while len(_EDGE_CACHE) > _EDGE_CACHE_CAP:
-        _, old = _EDGE_CACHE.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # a stopped session's entry just drops
-    return df
+    return _EDGE_CACHE.get_or_build(stamped_key(spark, sf_dir, _EDGE_TABLES), build)
 
 
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

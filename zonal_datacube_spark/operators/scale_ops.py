@@ -26,14 +26,13 @@ correctness artifact*, not just in library code + unit tests:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zonal_datacube_spark.functions.merge import upsert
 from zonal_datacube_spark.functions.salting import salted_join, salted_zonal_stats
-from zonal_datacube_spark.sources.loader import load_orc, load_table
+from zonal_datacube_spark.sources.loader import corpus_cache_dir, load_orc, load_table
 from zonal_datacube_spark.sources.sinks import write_orc
 
 SAMPLE_BUCKETS = 256
@@ -146,23 +145,16 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "event_type", "value", F.col("rn").cast("int").alias("rn"))
 
 
-_ORC_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "zds_orc_cache")
-
-
 def orc_orders_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per sf_dir) an ORC copy of orders under the system
     temp dir — the ORC-side twin of partitioned_events_path (and like it,
     tagged by corpus identity, not basename — r12 review)."""
-    from zonal_datacube_spark.sources.loader import corpus_cache_tag
-
-    tag = corpus_cache_tag(sf_dir, "orders")
-    path = os.path.join(_ORC_CACHE_ROOT, tag, "orders_orc")
+    path = os.path.join(
+        corpus_cache_dir(sf_dir, "orders", "zds_orc_cache"), "orders_orc"
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         write_orc(load_table(spark, sf_dir, "orders"), path)
     return path
-
-
-_ZORDER_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "zds_zorder_cache")
 
 
 def zorder_events_path(spark: SparkSession, sf_dir: str) -> str:
@@ -171,10 +163,10 @@ def zorder_events_path(spark: SparkSession, sf_dir: str) -> str:
     layout (functions/zorder.py); filters on EITHER dimension prune files
     by footer statistics (proven in tests/test_zorder.py)."""
     from zonal_datacube_spark.functions.zorder import write_zordered
-    from zonal_datacube_spark.sources.loader import corpus_cache_tag
 
-    tag = corpus_cache_tag(sf_dir, "events")
-    path = os.path.join(_ZORDER_CACHE_ROOT, tag, "events_zorder")
+    path = os.path.join(
+        corpus_cache_dir(sf_dir, "events", "zds_zorder_cache"), "events_zorder"
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         ev = (
             load_table(spark, sf_dir, "events")

@@ -22,17 +22,20 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zonal_datacube_spark.functions.tempdirs import fresh_dirs
-from zonal_datacube_spark.sources.loader import load_csv, load_json, load_table
+from zonal_datacube_spark.session import session_conf
+from zonal_datacube_spark.sources.loader import (
+    corpus_cache_dir,
+    load_csv,
+    load_json,
+    load_table,
+)
 from zonal_datacube_spark.sources.sinks import write_csv, write_json, write_parquet
 from zonal_datacube_spark.functions.local_rel import local_relation
-
-_SRC_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "zds_sources_cache")
 
 ORDERS_CSV_SCHEMA = (
     "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,"
@@ -58,10 +61,8 @@ _CACHE_SRC_TABLE = {
 
 
 def _cache_path(sf_dir: str, name: str) -> str:
-    from zonal_datacube_spark.sources.loader import corpus_cache_tag
-
-    tag = corpus_cache_tag(sf_dir, _CACHE_SRC_TABLE[name])
-    return os.path.join(_SRC_CACHE_ROOT, tag, name)
+    root = corpus_cache_dir(sf_dir, _CACHE_SRC_TABLE[name], "zds_sources_cache")
+    return os.path.join(root, name)
 
 
 def csv_orders_path(spark: SparkSession, sf_dir: str) -> str:
@@ -347,12 +348,8 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrected = daily.filter(
         (F.col("day") >= cutoff) & (F.col("event_type") == "purchase")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with session_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         corrected.write.mode("overwrite").partitionBy("day").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return (
         spark.read.parquet(out)
         .groupBy("event_type")

@@ -16,55 +16,37 @@ Spark's 1-day/6-hour windows are epoch-aligned, so window starts equal
 
 from __future__ import annotations
 
-import contextlib
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zonal_datacube_spark.sources.loader import load_table
+from zonal_datacube_spark.session import session_conf
+from zonal_datacube_spark.sources.loader import corpus_cache_dir, load_table
 
 _GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap in microseconds
 
 
-@contextlib.contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, n: int = 8):
-    """Pin shuffle partitions for a TRUE-streaming run. Each shuffle
-    partition materializes one state-store instance per stateful operator
-    per micro-batch — at fixture scale 32 instances are pure setup
-    overhead (~2-4s/query); 8 keeps the identical plan shape. At 100 TB
-    this knob goes UP with key cardinality, and is pinned thereafter by
-    the first run's checkpoint."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+# Shuffle partitions for a TRUE-streaming run. Each shuffle partition
+# materializes one state-store instance per stateful operator per
+# micro-batch — at fixture scale 32 instances are pure setup overhead
+# (~2-4s/query); 8 keeps the identical plan shape. At 100 TB this knob goes
+# UP with key cardinality, and is pinned thereafter by the first run's
+# checkpoint.
+_STREAM_CONFS = {"spark.sql.shuffle.partitions": "8"}
 
-
-@contextlib.contextmanager
-def _skip_no_data_batch(spark: SparkSession):
-    """Disable the trailing NO-DATA micro-batch for a streaming run whose
-    OUTPUT cannot depend on it (r14, guide §1.2 — don't run work whose
-    result is discarded). The no-data batch exists to advance the
-    watermark so held state can emit (outer-join nulls, append-mode
-    window finalization) or evict. An INNER stream-stream join emits
-    every row eagerly during data batches and the query stops right
-    after the drain, so its finalize batch only evicts state the stopped
-    query throws away — a full state-store load/commit cycle (8
-    partitions × 4 join stores) with zero observable effect. Callers
-    whose semantics DO need the final watermark pass (q_stream_outer_join,
-    watermarked-append aggregates) must never use this scope."""
-    prev = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev)
-
-_PART_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "zds_partitioned_events")
+# Disables the trailing NO-DATA micro-batch for a streaming run whose
+# OUTPUT cannot depend on it (r14, guide §1.2 — don't run work whose result
+# is discarded). The no-data batch exists to advance the watermark so held
+# state can emit (outer-join nulls, append-mode window finalization) or
+# evict. An INNER stream-stream join emits every row eagerly during data
+# batches and the query stops right after the drain, so its finalize batch
+# only evicts state the stopped query throws away — a full state-store
+# load/commit cycle (8 partitions × 4 join stores) with zero observable
+# effect. Runs whose semantics DO need the final watermark pass
+# (q_stream_outer_join, watermarked-append aggregates) must never use it.
+_NO_DATA_BATCH_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
@@ -77,10 +59,9 @@ def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     absolute path + events mtime/size), not just the dir basename (r12
     review): two corpora sharing a basename must never alias each
     other's cached copy, and regenerated fixtures must invalidate it."""
-    from zonal_datacube_spark.sources.loader import corpus_cache_tag
-
-    tag = corpus_cache_tag(sf_dir, "events")
-    path = os.path.join(_PART_CACHE_ROOT, tag, "events_by_day")
+    path = os.path.join(
+        corpus_cache_dir(sf_dir, "events", "zds_partitioned_events"), "events_by_day"
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         ev = load_table(spark, sf_dir, "events").withColumn(
             "day", F.date_format("ts", "yyyy-MM-dd")
@@ -115,8 +96,6 @@ def q_stream_foreach_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the finite fixture is exactly the semantics Structured Streaming
     promises. The sink dir is a fresh temp dir per call, left on disk
     because the returned DataFrame reads it lazily."""
-    import tempfile
-
     from zonal_datacube_spark.streaming.demo import (
         events_stream,
         read_foreach_batch_result,
@@ -125,7 +104,7 @@ def q_stream_foreach_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     out = tempfile.mkdtemp(prefix="zds_foreach_")
-    with _stream_shuffle_partitions(spark):
+    with session_conf(spark, _STREAM_CONFS):
         run_stream_foreach_batch(
             tumbling_counts(events_stream(spark, sf_dir)), spark, out
         )
@@ -140,8 +119,6 @@ def q_stream_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert sink folds them into serving state — the O(changed keys) shape
     that survives when complete-mode snapshots stop fitting. Final state ≡
     the batch tumbling aggregate (same oracle as q_stream_tumbling)."""
-    import tempfile
-
     from zonal_datacube_spark.streaming.demo import (
         events_stream,
         run_stream_upsert,
@@ -149,7 +126,7 @@ def q_stream_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     out = tempfile.mkdtemp(prefix="zds_upsert_")
-    with _stream_shuffle_partitions(spark):
+    with session_conf(spark, _STREAM_CONFS):
         return run_stream_upsert(
             tumbling_counts(events_stream(spark, sf_dir)),
             spark,
@@ -321,7 +298,7 @@ def q_stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = enriched_segment_counts(
         events_stream(spark, sf_dir), load_table(spark, sf_dir, "customer")
     )
-    with _stream_shuffle_partitions(spark):
+    with session_conf(spark, _STREAM_CONFS):
         q = (
             result.writeStream.format("memory")
             .queryName("zds_stream_enrich")
@@ -340,8 +317,6 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-bound join condition is what lets each side's state store evict
     — unbounded stream-stream joins are rejected by Spark outright. The
     oracle is the equivalent batch self-join."""
-    import tempfile
-
     from zonal_datacube_spark.streaming.demo import (
         events_stream,
         run_stream_append,
@@ -353,7 +328,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the shared 8-partition pin matters double here. The inner join
     # emits matches eagerly, so the trailing no-data batch would only
     # evict state this availableNow run discards — skip it (r14).
-    with _stream_shuffle_partitions(spark), _skip_no_data_batch(spark):
+    with session_conf(spark, {**_STREAM_CONFS, **_NO_DATA_BATCH_OFF}):
         run_stream_append(
             view_purchase_join(events_stream(spark, sf_dir)), spark, out
         )
@@ -370,8 +345,6 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon, null-emission depends on where the final watermark stops —
     both engine and oracle apply the identical cutoff, so the compared
     region is exactly the deterministic one."""
-    import tempfile
-
     from zonal_datacube_spark.streaming.demo import (
         events_stream,
         run_stream_append,
@@ -379,7 +352,7 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     out = tempfile.mkdtemp(prefix="zds_ssouter_")
-    with _stream_shuffle_partitions(spark):
+    with session_conf(spark, _STREAM_CONFS):
         run_stream_append(
             view_purchase_left_join(events_stream(spark, sf_dir)), spark, out
         )
@@ -420,13 +393,12 @@ def q_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain batch groupBy: hash-matching it proves the store's contents,
     the reader's decode, and the stream's exactly-once accumulation all
     at once."""
-    import tempfile
     import uuid
 
     from zonal_datacube_spark.streaming.demo import events_stream
 
     ckpt = tempfile.mkdtemp(prefix="zds_statereader_")
-    with _stream_shuffle_partitions(spark):
+    with session_conf(spark, _STREAM_CONFS):
         agg = (
             events_stream(spark, sf_dir)
             .groupBy("user_id")
@@ -459,7 +431,7 @@ def q_stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once contract for custom stateful operators."""
     from zonal_datacube_spark.streaming.stateful import run_stateful_demo
 
-    with _stream_shuffle_partitions(spark):
+    with session_conf(spark, _STREAM_CONFS):
         sink = run_stateful_demo(spark, sf_dir, table="zds_stateful_key")
     return sink.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),

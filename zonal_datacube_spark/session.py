@@ -16,6 +16,7 @@ Config rationale (SURVEY.md §4.4):
 from __future__ import annotations
 
 import atexit
+import contextlib
 import os
 import shutil
 import tempfile
@@ -78,6 +79,26 @@ def get_spark(app_name: str = "zonal-datacube-spark", cpus: str | None = None) -
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .getOrCreate()
     )
+
+
+@contextlib.contextmanager
+def session_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` for the block, then put every key back: its previous
+    value, or unset if it was unset before. The confs are session-global:
+    a query planned on another thread during the block sees them too."""
+    previous = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        # every set inside the try: if one raises, the keys already set
+        # are still restored
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in previous.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def stop_spark() -> None:

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Apply with ``session.session_conf(spark, ROCKSDB_STATE_STORE_CONFS)``.
 ROCKSDB_STATE_STORE_CONFS: dict[str, str] = {
     # off-heap, SSD-spillable per-partition state
     "spark.sql.streaming.stateStore.providerClass": (
@@ -32,24 +33,6 @@ ROCKSDB_STATE_STORE_CONFS: dict[str, str] = {
     # executor (block cache + memtables) instead of per-instance defaults
     "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage": "true",
 }
-
-
-def use_rocksdb_state_store(spark: SparkSession) -> dict[str, str | None]:
-    """Apply the RocksDB state-store confs; returns the previous values so
-    callers (tests) can restore them."""
-    previous: dict[str, str | None] = {}
-    for k, v in ROCKSDB_STATE_STORE_CONFS.items():
-        previous[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    return previous
-
-
-def restore_confs(spark: SparkSession, previous: dict[str, str | None]) -> None:
-    for k, v in previous.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
 
 
 def kafka_source_options(

@@ -183,14 +183,13 @@ def run_stateful_tws_demo(
     path is library surface with a skip-gated test, not a declared
     key — the declared custom-stateful key (q_stream_stateful_profile)
     runs on applyInPandasWithState, which needs no protobuf."""
+    from zonal_datacube_spark.session import session_conf
     from zonal_datacube_spark.streaming.demo import events_stream
     from zonal_datacube_spark.streaming.scale_config import (
-        restore_confs,
-        use_rocksdb_state_store,
+        ROCKSDB_STATE_STORE_CONFS,
     )
 
-    prev = use_rocksdb_state_store(spark)
-    try:
+    with session_conf(spark, ROCKSDB_STATE_STORE_CONFS):
         q = (
             user_profiles_tws(events_stream(spark, sf_dir))
             .writeStream.format("memory")
@@ -200,6 +199,4 @@ def run_stateful_tws_demo(
             .start()
         )
         q.awaitTermination(120)
-    finally:
-        restore_confs(spark, prev)
     return spark.table(table)
