@@ -15,8 +15,8 @@ from zonal_datacube_spark.datacube import (
     TILE,
     assign_zones,
     make_zones,
+    prune_tiles,
     synthetic_raster,
-    tiles_intersecting,
     zonal_stats,
     zonal_stats_tiled,
 )
@@ -33,16 +33,12 @@ def zones(spark):
 
 
 def test_fishnet_prunes_tiles(spark, raster, zones):
-    # pruning must really drop tiles of the actual raster (zone bboxes may
-    # overhang the raster edge — phantom tiles are dropped by the semi join)
+    # the prune assign_zones runs must really drop tiles of the actual
+    # raster (zone bboxes may overhang the raster edge — phantom tiles are
+    # dropped by the semi join)
     all_tiles = raster.select("tile_id").distinct().count()
     one_zone = zones.filter(F.col("zone_id") == 0)  # 600x500 bbox
-    kept = (
-        raster.select("tile_id")
-        .distinct()
-        .join(tiles_intersecting(one_zone, width=1024), "tile_id", "left_semi")
-        .count()
-    )
+    kept = prune_tiles(raster, one_zone).select("tile_id").distinct().count()
     assert 0 < kept < all_tiles
 
 

@@ -70,7 +70,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from zonal_datacube_spark.compare import compare_query, duck_connect
 from zonal_datacube_spark.plans.diagnostics import formatted_plan
 from zonal_datacube_spark.registry import all_oracle_sql, all_queries
-from zonal_datacube_spark.session import get_spark
+from zonal_datacube_spark.session import get_spark, session_conf
 from zonal_datacube_spark.sources.loader import TABLES, load_table
 
 REHEARSAL_ROOT = "/tmp/zds_rehearsal"
@@ -230,20 +230,6 @@ def build_layout(spark, sf_dir: str, dest: str, rebuild: bool) -> None:
         fh.write(stamp)
 
 
-class _conf:
-    """Set/restore a runtime conf around a block."""
-
-    def __init__(self, spark, key: str, value: str):
-        self.spark, self.key, self.value = spark, key, value
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(self.key)
-        self.spark.conf.set(self.key, self.value)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set(self.key, self.prev)
-
-
 def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--rebuild"]
     rebuild = "--rebuild" in sys.argv[1:]
@@ -272,7 +258,7 @@ def main() -> int:
         except Exception as exc:  # pragma: no cover — surfaced in output
             failures += 1
             print(f"[BASE-ERROR] {k}: {type(exc).__name__}: {exc}")
-    with _conf(spark, "spark.sql.shuffle.partitions", REHEARSAL_PARTITIONS):
+    with session_conf(spark, {"spark.sql.shuffle.partitions": REHEARSAL_PARTITIONS}):
         for k in plan_keys:
             if k not in base_cls:
                 continue

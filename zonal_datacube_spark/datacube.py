@@ -103,32 +103,26 @@ def _zone_tiles(zones: DataFrame) -> DataFrame:
     )
 
 
-def tiles_intersecting(zones: DataFrame, width: int = 2048) -> DataFrame:
-    """Fishnet pruning: the distinct tile_ids overlapped by any zone bbox
-    on a raster ``width`` pixels wide — joined against the pixel table
-    this prunes entire tiles before any pixel is touched (the
-    COG-window-read analogue)."""
-    tpr = (width + TILE - 1) // TILE  # tiles per row
-    return (
-        _zone_tiles(zones)
-        .select((F.col("ty") * tpr + F.col("tx")).alias("tile_id"))
-        .distinct()
-    )
-
-
-def assign_zones(pixels: DataFrame, zones: DataFrame) -> DataFrame:
-    """Pixel→zone assignment: fishnet prune (semi join on each pixel's
-    tile coordinates, derived from its own x and y, so it holds for any
-    raster width) then broadcast bbox-containment join. Overlapping zones
-    multi-assign (the zonal-stats convention: a pixel counts in every
-    zone containing it)."""
+def prune_tiles(pixels: DataFrame, zones: DataFrame) -> DataFrame:
+    """Fishnet pruning: keep only the pixels of tiles some zone bbox
+    overlaps — a semi join on each pixel's tile coordinates, derived from
+    its own x and y, so it holds for any raster width. Entire tiles drop
+    before the containment join touches a pixel (the COG-window-read
+    analogue)."""
     tiles = F.broadcast(_zone_tiles(zones))
-    pruned = pixels.join(
+    return pixels.join(
         tiles,
         ((pixels.x / TILE).cast("int") == tiles.tx)
         & ((pixels.y / TILE).cast("int") == tiles.ty),
         "left_semi",
     )
+
+
+def assign_zones(pixels: DataFrame, zones: DataFrame) -> DataFrame:
+    """Pixel→zone assignment: fishnet prune (``prune_tiles``) then
+    broadcast bbox-containment join. Overlapping zones multi-assign (the
+    zonal-stats convention: a pixel counts in every zone containing it)."""
+    pruned = prune_tiles(pixels, zones)
     z = F.broadcast(zones)
     return pruned.join(
         z,

@@ -358,9 +358,11 @@ _INDEX_CACHE = StampedCache("pq_index", cap=4)
 
 def _index(emb: DataFrame, cache_key: str | None, params: tuple, build) -> tuple:
     """The index ``build()`` returns, a tuple ending in its code table.
-    With a ``cache_key`` — the corpus dir ``emb`` was loaded from — it is
-    built once per (session, corpus, embeddings stamp, params) and its
-    code table persisted; without one it is built per call, unpersisted."""
+    With a ``cache_key`` it is built once per (session, corpus, embeddings
+    stamp, params) and its code table persisted; without one it is built
+    per call, unpersisted. ``cache_key`` must be the corpus dir ``emb`` was
+    loaded from: its ``embeddings.parquet`` is stamped into the key, so any
+    other label raises FileNotFoundError."""
     if cache_key is None:
         return build()
 
@@ -397,10 +399,12 @@ def ivf_pq_ann(
     DataFrame joins: every stage is an equi-join or aggregate; the only
     broadcast state is centroids + codebook + per-probe LUT (all KB-sized).
 
-    ``cache_key`` (the corpus dir ``emb`` was loaded from) enables the
-    build/serve split: training + encoding run once per (corpus content,
-    params) and later calls serve from the cached index — the
-    offline-build lifecycle every production ANN deployment uses."""
+    ``cache_key`` enables the build/serve split: training + encoding run
+    once per (corpus content, params) and later calls serve from the
+    cached index — the offline-build lifecycle every production ANN
+    deployment uses. It must be the corpus dir ``emb`` was loaded from
+    (the dir holding ``embeddings.parquet``, whose stamp keys the index);
+    any other label raises FileNotFoundError."""
     from zonal_datacube_spark.functions.kmeans import assign_cells, kmeans_fit
 
     def build() -> tuple:
@@ -480,7 +484,12 @@ def pq_ann(
 
     ``train_mod`` > 1 trains codebooks on the deterministic 1/train_mod
     slice ``vec_id % train_mod == 0`` — codebooks need ~100·K points per
-    subspace, not the corpus; production PQ always trains on a sample."""
+    subspace, not the corpus; production PQ always trains on a sample.
+
+    ``cache_key`` must be the corpus dir ``emb`` was loaded from (the dir
+    holding ``embeddings.parquet``): the index is then built once per
+    embeddings stamp and params, and any other label raises
+    FileNotFoundError. ``None`` builds the index per call."""
     def build() -> tuple:
         d = dim or len(emb.select("embedding").first()[0])
         train_emb = (
