@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -40,7 +41,10 @@ def main() -> int:
     except ValueError:
         sf = -1.0  # unrecognized dir naming; timings still valid
     spark = get_spark("zds-bench")
-    queries = all_queries()
+    registry = all_queries()
+    # the warm-up looks its keys up through this; the timed loop uses
+    # the plain registry
+    queries = RecordingQueries(registry)
 
     # Subset mode (VERDICT r11 next-round #3): `bench.py q_foo q_bar ...`
     # re-measures just the named keys — the tool for adjudicating
@@ -107,6 +111,8 @@ def main() -> int:
     # the serving path below
     queries["q_sim_ivfpq"](spark, sf_dir).count()
     queries["q_sim_pq_ann"](spark, sf_dir).count()
+    warmup_keys = queries.looked_up
+    queries = registry
 
     # Materialize via Arrow (toPandas): full result transfer at columnar
     # speed — collect()'s per-Row Python object construction would bench
@@ -170,6 +176,8 @@ def main() -> int:
                     "after": [round(x, 2) for x in load_after],
                 },
                 "suspect_under_load": suspect,
+                "warmup_keys": warmup_keys,
+                "provenance": provenance(spark, sf_dir),
                 # cache visibility (VERDICT r12 nit #3): eviction is
                 # silent-but-slow (recompute), so thrash must be
                 # observable — a full suite run should show evictions=0.
@@ -188,6 +196,44 @@ def main() -> int:
     )
     print(bench_json_line(timings, sf))
     return 0
+
+
+class RecordingQueries(dict):
+    """The registry dict, noting every key looked up in ``looked_up``."""
+
+    def __init__(self, queries: dict):
+        super().__init__(queries)
+        self.looked_up: list[str] = []
+
+    def __getitem__(self, key):
+        self.looked_up.append(key)
+        return super().__getitem__(key)
+
+
+def provenance(spark, sf_dir: str) -> dict:
+    """What produced the artifact: the tree (git SHA, and whether tracked
+    files differ from it), the box (cpus, the session's parallelism, the
+    loadavg when written) and the corpus dir."""
+    root = os.path.dirname(os.path.abspath(__file__))
+
+    def git(*args: str) -> str | None:
+        try:
+            out = subprocess.run(
+                ["git", "-C", root, *args], capture_output=True, text=True, timeout=10
+            )
+        except (OSError, subprocess.SubprocessError):
+            return None
+        return out.stdout.strip() if out.returncode == 0 else None
+
+    status = git("status", "--porcelain", "--untracked-files=no")
+    return {
+        "git_sha": git("rev-parse", "HEAD"),
+        "git_dirty": None if status is None else bool(status),
+        "cpus": os.cpu_count(),
+        "spark_parallelism": spark.sparkContext.defaultParallelism,
+        "sf_dir": os.path.realpath(sf_dir),
+        "loadavg": [round(x, 2) for x in os.getloadavg()],
+    }
 
 
 def suspect_keys(

@@ -15,7 +15,6 @@ from zonal_datacube_spark.datacube import (
     TILE,
     assign_zones,
     make_zones,
-    prune_tiles,
     synthetic_raster,
     zonal_stats,
     zonal_stats_tiled,
@@ -33,12 +32,19 @@ def zones(spark):
 
 
 def test_fishnet_prunes_tiles(spark, raster, zones):
-    # the prune assign_zones runs must really drop tiles of the actual
-    # raster (zone bboxes may overhang the raster edge — phantom tiles are
-    # dropped by the semi join)
-    all_tiles = raster.select("tile_id").distinct().count()
+    # assign_zones is one broadcast hash join keyed on the tile coordinates
+    # (no nested-loop bbox join, no separate semi-join prune), and its
+    # probe really drops the tiles of the raster no zone overlaps
     one_zone = zones.filter(F.col("zone_id") == 0)  # 600x500 bbox
-    kept = prune_tiles(raster, one_zone).select("tile_id").distinct().count()
+    assigned = assign_zones(raster, one_zone)
+    plan = assigned._jdf.queryExecution().executedPlan().toString()
+    bhj = [line for line in plan.splitlines() if "BroadcastHashJoin" in line]
+    assert len(bhj) == 1, plan
+    keys = bhj[0].split("BroadcastHashJoin", 1)[1].split("Inner", 1)[0]
+    assert "tx#" in keys and "ty#" in keys, plan
+    assert "BroadcastNestedLoopJoin" not in plan and "LeftSemi" not in plan, plan
+    all_tiles = raster.select("tile_id").distinct().count()
+    kept = assigned.select("tile_id").distinct().count()
     assert 0 < kept < all_tiles
 
 

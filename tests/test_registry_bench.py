@@ -8,6 +8,7 @@ truncated → ``parsed: null``). These tests lock both artifacts' shape.
 from __future__ import annotations
 
 import json
+import os
 
 from bench import bench_json_line
 from zonal_datacube_spark.registry import KEY_ORDER, all_oracle_sql, all_queries
@@ -312,6 +313,23 @@ def test_bench_warmup_surface_is_pinned():
     )
     # warm_family_grains is the only non-key warm-up entry point allowed
     assert prologue.count("warm_family_grains(spark, sf_dir)") == 1
+
+
+def test_bench_records_warmup_keys_and_provenance(spark, tmp_path):
+    from bench import RecordingQueries, provenance
+
+    registry = {"q_a": 1, "q_b": 2}
+    queries = RecordingQueries(registry)
+    assert queries["q_b"] == 2 and "q_a" in queries
+    assert queries.looked_up == ["q_b"]
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    got = provenance(spark, str(tmp_path))
+    assert set(got) == {"git_sha", "git_dirty", "cpus", "spark_parallelism", "sf_dir", "loadavg"}
+    if os.path.isdir(os.path.join(root, ".git")):
+        assert len(got["git_sha"]) == 40 and isinstance(got["git_dirty"], bool)
+    assert got["cpus"] == os.cpu_count() and got["spark_parallelism"] >= 1
+    assert got["sf_dir"] == os.path.realpath(tmp_path) and len(got["loadavg"]) == 3
 
 
 def test_oracle_keys_subset_and_ordered_like_queries():

@@ -11,14 +11,14 @@ the semantics.
 Layout
 ------
 - ``session``    : SparkSession factory with the engine's fixed config
+- ``worker_daemon``: Python worker daemon that imports the installed pyspark
 - ``sources``    : parquet loaders / sinks for the fixture star schema
 - ``operators``  : the query inventory (SURVEY.md §2) — one module per family
 - ``functions``  : reusable column expressions (arrays, text hashing, UDFs)
 - ``plans``      : plan diagnostics (pushdown / broadcast / codegen checks)
 - ``streaming``  : Structured Streaming demos (batch-equivalence checked)
 - ``registry``   : merges every operator module's QUERIES/ORACLE dicts
+
+Importing the package imports nothing else: Python workers load
+``worker_daemon`` through it before pyspark is imported.
 """
-
-from zonal_datacube_spark.session import get_spark, stop_spark
-
-__all__ = ["get_spark", "stop_spark"]

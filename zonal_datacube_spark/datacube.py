@@ -3,7 +3,7 @@
 "Scalable Dask-backed zonal statistics").
 
 Data model (SURVEY.md §1.1 layout (a)): the **long pixel table**
-``(tile_id, y, x, layer columns...)`` partitioned by tile_id — every zonal
+``(tile_id, y, x, layer columns...)`` keyed by tile_id — every zonal
 operation becomes relational and Catalyst-optimizable. The fishnet is the
 regular tile grid; zones here are rectangles (bbox containment, the
 relational core of the real thing). TRUE polygon containment — concave-
@@ -12,10 +12,12 @@ needed — lives in ``operators/geometry.py`` (q_zonal_polygon) and slots
 into this same pipeline wherever zones are real polygons.
 
 Pipeline (the Raptor decomposition, PAPERS.md:9):
-1. fishnet prune: only tiles intersecting any zone bbox are scanned
-   (partition pruning on tile_id — the reference's signature I/O win);
-2. pixel→zone assignment: broadcast join on bbox containment;
-3. per-zone aggregate: partial per-partition + final combine.
+1. fishnet prune + pixel→zone assignment, fused into one tile-keyed
+   broadcast hash join: the zones are exploded to the (tx, ty) tiles
+   their bboxes overlap; each pixel probes on its own tile coordinates
+   (x div TILE, y div TILE) with bbox containment as the join's extra
+   condition, so pixels of tiles no zone overlaps drop in the probe;
+2. per-zone aggregate: partial per-partition + final combine.
 
 Two execution paths are provided and tested equal:
 - ``zonal_stats``        — pure relational (the default; whole-stage codegen);
@@ -23,8 +25,10 @@ Two execution paths are provided and tested equal:
   combine (the reference's per-tile analysis-function model, for custom
   NumPy statistics that SQL can't express).
 
-Scale: pixels are generated/laid out so one tile ≈ one task; nothing ever
-materializes a global raster. 100 TB of pixels = more tiles, same plan.
+Scale: ``synthetic_raster`` is row-major over ``n_parts`` ``spark.range``
+partitions, so a partition holds whole pixel rows and spans a full row of
+tiles; nothing ties a tile to a task. Nothing ever materializes a global
+raster: 100 TB of pixels = more rows and tiles, same plan.
 """
 
 from __future__ import annotations
@@ -86,49 +90,37 @@ def make_zones(spark: SparkSession) -> DataFrame:
     )
 
 
+def _tile(c):
+    """Fishnet tile index of an x or y coordinate."""
+    return F.floor(c / TILE).cast("int")
+
+
 def _zone_tiles(zones: DataFrame) -> DataFrame:
-    """The distinct fishnet tile coordinates (tx, ty) any zone bbox
-    overlaps."""
+    """Every zone row once per fishnet tile (tx, ty) its bbox overlaps."""
 
     def span(lo: str, hi: str):
-        return F.sequence(
-            F.floor(F.col(lo) / TILE).cast("int"),
-            F.floor((F.col(hi) - 1) / TILE).cast("int"),
-        )
+        return F.sequence(_tile(F.col(lo)), _tile(F.col(hi) - 1))
 
-    return (
-        zones.select(F.explode(span("ymin", "ymax")).alias("ty"), "xmin", "xmax")
-        .select(F.explode(span("xmin", "xmax")).alias("tx"), "ty")
-        .distinct()
-    )
-
-
-def prune_tiles(pixels: DataFrame, zones: DataFrame) -> DataFrame:
-    """Fishnet pruning: keep only the pixels of tiles some zone bbox
-    overlaps — a semi join on each pixel's tile coordinates, derived from
-    its own x and y, so it holds for any raster width. Entire tiles drop
-    before the containment join touches a pixel (the COG-window-read
-    analogue)."""
-    tiles = F.broadcast(_zone_tiles(zones))
-    return pixels.join(
-        tiles,
-        ((pixels.x / TILE).cast("int") == tiles.tx)
-        & ((pixels.y / TILE).cast("int") == tiles.ty),
-        "left_semi",
+    return zones.select("*", F.explode(span("ymin", "ymax")).alias("ty")).select(
+        "*", F.explode(span("xmin", "xmax")).alias("tx")
     )
 
 
 def assign_zones(pixels: DataFrame, zones: DataFrame) -> DataFrame:
-    """Pixel→zone assignment: fishnet prune (``prune_tiles``) then
-    broadcast bbox-containment join. Overlapping zones multi-assign (the
-    zonal-stats convention: a pixel counts in every zone containing it)."""
-    pruned = prune_tiles(pixels, zones)
-    z = F.broadcast(zones)
-    return pruned.join(
+    """Pixel→zone assignment as one broadcast hash join: the zones exploded
+    to their tiles, joined on each pixel's own tile coordinates (so it
+    holds for any raster width), with bbox containment as the join's extra
+    condition. Tiles no zone overlaps find no build row and drop in the
+    probe (the fishnet prune); the zone table is read once. Overlapping
+    zones multi-assign (the zonal-stats convention: a pixel counts in
+    every zone containing it)."""
+    z = F.broadcast(_zone_tiles(zones))
+    return pixels.join(
         z,
-        (pruned.x >= z.xmin) & (pruned.x < z.xmax)
-        & (pruned.y >= z.ymin) & (pruned.y < z.ymax),
-    )
+        (_tile(pixels.x) == z.tx) & (_tile(pixels.y) == z.ty)
+        & (pixels.x >= z.xmin) & (pixels.x < z.xmax)
+        & (pixels.y >= z.ymin) & (pixels.y < z.ymax),
+    ).drop("tx", "ty")
 
 
 def zonal_stats(pixels: DataFrame, zones: DataFrame, value_col: str = "elevation") -> DataFrame:

@@ -45,7 +45,10 @@ TICK_STREAM_NAME = "zds_tick_stream"
 # does in microseconds, while a production feed at millions of rows
 # per tick would have OVERFILLED a 64-tick chunk). A backlog of T ticks
 # at R rows/tick drains in ceil(T*R/CHUNK_ROWS) partitions either way —
-# deep backlogs still fan out cluster-wide.
+# deep backlogs still fan out cluster-wide. A partition holds whole
+# ticks, at least one, so its rows are bounded by
+# max(CHUNK_ROWS, rows_per_tick): a tick wider than the budget is never
+# split.
 CHUNK_ROWS = 4096
 
 
